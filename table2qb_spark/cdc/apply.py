@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.schema_evolution import reconcile_and_flatten
-from table2qb_spark.lake.merge import merge_upsert
+from table2qb_spark.lake.merge import merge_patch, merge_upsert
+from table2qb_spark.lake.mor import merge_mor
 from table2qb_spark.lake.table import LakeTable
 
 
@@ -65,6 +66,78 @@ def malformed_reason_expr(
     return reason
 
 
+def merge_for(merge_engine: str = "upsert", merge_on_read: bool = False):
+    """The merge an ingest front-end applies, validated before any I/O so a
+    bad combination fails fast. "upsert" = full-row-image last-writer-wins
+    (``merge_upsert``, or ``merge_mor``'s appends + equality deletes with
+    ``merge_on_read``); "patch" = partial-update per-column
+    last-non-null-wins (``merge_patch``) for MINIMAL-row-image /
+    $set-shaped logs. Patch applies per-bucket COW rewrites, so it composes
+    with staging but not with merge-on-read (equality deletes mask whole
+    superseded ROWS — a partial payload has no full row to append).
+
+    Returns ``merge(table, batch, commit_id, *, op_col, seq_col,
+    summary_update, publish=True, **upsert_options)``; the upsert-only
+    options (size hint, two-phase dedup, forced stats pass) are dropped
+    for patch and MOR, whose stats passes are explicit already."""
+    if merge_engine not in ("upsert", "patch"):
+        raise ValueError(f"Unknown merge_engine {merge_engine!r}")
+    if merge_engine == "patch" and merge_on_read:
+        raise ValueError("merge_engine='patch' requires copy-on-write "
+                         "(merge-on-read appends full row images)")
+    if merge_engine == "upsert" and not merge_on_read:
+        return merge_upsert
+    engine = merge_mor if merge_on_read else merge_patch
+
+    def merge(table, batch, commit_id, *, op_col, seq_col, summary_update,
+              publish=True, **_upsert_options):
+        return engine(table, batch, commit_id, op_col=op_col, seq_col=seq_col,
+                      summary_update=summary_update, publish=publish)
+
+    return merge
+
+
+def record_metrics(
+    table: LakeTable,
+    batch: int,
+    commit_id: str,
+    t0: float,
+    stats: dict,
+    counts: bool = True,
+    source: str | None = None,
+    seq_range: tuple[int, int] | None = None,
+    lag_events: int | None = None,
+    **tail,
+) -> dict:
+    """Append one ingest front-end's per-batch metrics row to the table's
+    ``_meta/metrics.jsonl`` (read by ``cdc-status --metrics``) and return
+    it. ``stats`` is the merge's result; ``counts`` adds its event counts;
+    events/sec is over the seq range when one is given, else over the
+    applied events; ``tail`` fields close the row."""
+    elapsed = time.time() - t0
+    n_events = int(stats.get("upserts", 0) or 0) + int(stats.get("deletes", 0) or 0)
+    row: dict = {"batch": batch, "commit_id": commit_id}
+    if source is not None:
+        row["source"] = source
+    if seq_range is not None:
+        row["seq_start"], row["seq_end"] = seq_range
+    if counts:
+        row["batch_events"] = n_events
+        row["upserts"] = stats.get("upserts", 0)
+        row["deletes"] = stats.get("deletes", 0)
+    row["buckets_touched"] = stats.get("affected_buckets", 0)
+    row["seconds"] = round(elapsed, 3)
+    rated = n_events if seq_range is None else seq_range[1] - seq_range[0] + 1
+    row["events_per_sec"] = round(rated / elapsed, 1) if elapsed else None
+    if lag_events is not None:
+        row["lag_events"] = lag_events
+    row.update(tail)
+    with open(os.path.join(table.path, "_meta", "metrics.jsonl"), "a",
+              encoding="utf-8") as f:
+        f.write(json.dumps(row) + "\n")
+    return row
+
+
 @dataclass
 class BatchResult:
     batch_index: int
@@ -92,20 +165,10 @@ class ChangeLogReplayer:
         stage: bool = False,
         merge_engine: str = "upsert",
     ):
-        # merge engine: "upsert" = full-row-image last-writer-wins;
-        # "patch" = partial-update per-column last-non-null-wins
-        # (cdc/patch.py / lake.merge.merge_patch) for MINIMAL-row-image /
-        # $set-shaped logs. Patch applies per-bucket COW rewrites, so it
-        # composes with staging but not with merge-on-read (equality
-        # deletes mask whole superseded ROWS — a partial payload has no
-        # full row to append). Validated before any I/O so a bad combo
-        # fails fast.
-        if merge_engine not in ("upsert", "patch"):
-            raise ValueError(f"Unknown merge_engine {merge_engine!r}")
-        if merge_engine == "patch" and merge_on_read:
-            raise ValueError("merge_engine='patch' requires copy-on-write "
-                             "(merge-on-read appends full row images)")
-        self.merge_engine = merge_engine
+        # merge-on-read: append winners + equality-delete files instead of
+        # rewriting touched buckets (lake/mor.py) — the update-heavy-stream
+        # write-amplification escape; pair with periodic cdc-compact
+        self._merge = merge_for(merge_engine, merge_on_read)
         self.spark = spark
         self.table = table
         self._events_path = events if isinstance(events, str) else None
@@ -131,10 +194,6 @@ class ChangeLogReplayer:
         self.payload_col = payload_col
         self.dlq_dir = dlq_dir
         self.valid_ops = tuple(valid_ops)
-        # merge-on-read: append winners + equality-delete files instead of
-        # rewriting touched buckets (lake/mor.py) — the update-heavy-stream
-        # write-amplification escape; pair with periodic cdc-compact
-        self.merge_on_read = merge_on_read
         # write-audit-publish: stage the batch's snapshot (header+manifests,
         # no VERSION swap, no commit marker) for audit before publish.
         # Schema-evolution commits (additive metadata) still publish
@@ -253,64 +312,26 @@ class ChangeLogReplayer:
             batch = batch.withColumn("content_sha", F.sha2(F.col("content"), 256))
         # schema evolution first (metadata-only commits), then flat MERGE
         batch = reconcile_and_flatten(self.table, batch, commit_id, self.payload_col)
-        if self.merge_on_read:
-            from table2qb_spark.lake.mor import merge_mor
-
-            stats = merge_mor(
-                self.table,
-                batch,
-                commit_id,
-                op_col=self.op_col,
-                seq_col=self.seq_col,
-                summary_update={"last_batch": batch_index, "range_end": end},
-                publish=not self.stage,
-            )
-        elif self.merge_engine == "patch":
-            from table2qb_spark.lake.merge import merge_patch
-
-            stats = merge_patch(
-                self.table,
-                batch,
-                commit_id,
-                op_col=self.op_col,
-                seq_col=self.seq_col,
-                summary_update={"last_batch": batch_index, "range_end": end},
-                publish=not self.stage,
-            )
-        else:
-            stats = merge_upsert(
-                self.table,
-                batch,
-                commit_id,
-                op_col=self.op_col,
-                seq_col=self.seq_col,
-                two_phase_dedup=self.two_phase_dedup,
-                # max_seq is NOT pinned to the range end here: merge records
-                # the actually-observed max sequence (ops truth); resume keys
-                # off last_batch, which is range-based
-                summary_update={"last_batch": batch_index, "range_end": end},
-                batch_size_hint=end - start + 1,
-                publish=not self.stage,
-            )
-        elapsed = time.time() - t0
-        n_events = int(stats.get("upserts", 0)) + int(stats.get("deletes", 0))
-        metrics = {
-            "batch": batch_index,
-            "commit_id": commit_id,
-            "seq_start": start,
-            "seq_end": end,
-            "batch_events": n_events,
-            "upserts": stats.get("upserts", 0),
-            "deletes": stats.get("deletes", 0),
-            "buckets_touched": stats.get("affected_buckets", 0),
-            "seconds": round(elapsed, 3),
-            "events_per_sec": round((end - start + 1) / elapsed, 1) if elapsed else None,
-            "lag_events": max(0, hi_total - end),
-            "dlq_events": dlq_events,
-            "ts": time.time(),
-        }
-        with open(self.metrics_path, "a", encoding="utf-8") as f:
-            f.write(json.dumps(metrics) + "\n")
+        stats = self._merge(
+            self.table,
+            batch,
+            commit_id,
+            op_col=self.op_col,
+            seq_col=self.seq_col,
+            # max_seq is NOT pinned to the range end here: merge records the
+            # actually-observed max sequence (ops truth); resume keys off
+            # last_batch, which is range-based
+            summary_update={"last_batch": batch_index, "range_end": end},
+            publish=not self.stage,
+            two_phase_dedup=self.two_phase_dedup,
+            batch_size_hint=end - start + 1,
+        )
+        metrics = record_metrics(
+            self.table, batch_index, commit_id, t0, stats,
+            seq_range=(start, end), lag_events=max(0, hi_total - end),
+            dlq_events=dlq_events, ts=time.time(),
+        )
+        n_events = metrics["batch_events"]
         return BatchResult(batch_index, commit_id, n_events, False, metrics)
 
     # ----- full replay -----------------------------------------------------------

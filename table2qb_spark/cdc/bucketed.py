@@ -48,7 +48,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from table2qb_spark.cdc.apply import _leaf_column_index
+from table2qb_spark.cdc.apply import _leaf_column_index, record_metrics
+from table2qb_spark.lake.merge import key_group_last
 from table2qb_spark.lake.table import LakeTable, key_bucket_expr
 
 LAYOUT_FILE = "_layout.json"
@@ -137,7 +138,6 @@ class BucketedReplayer:
         self.delete_op = delete_op
         self.batch_events = batch_events
         self.buckets_per_job = max(1, buckets_per_job)
-        self.metrics_path = os.path.join(table.path, "_meta", "metrics.jsonl")
         self._event_buckets = sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(events_dir)
@@ -228,10 +228,7 @@ class BucketedReplayer:
         # struct lead. This replaced a mapInPandas reduction — the
         # Arrow->pandas->Arrow round-trip was ~6x slower than staying in
         # whole-stage-codegen'd JVM operators.
-        from pyspark.sql.window import Window
-
         key_cols = [F.col(k) for k in keys]
-        w = Window.orderBy(*key_cols, F.col("__seq"), F.col("__pri"))
 
         # per-row invariant parity with ChangeLogReplayer (BASELINE
         # input_hint): tables carrying content_sha get it computed at ingest
@@ -281,11 +278,7 @@ class BucketedReplayer:
             F.lit("U").alias("__op"),
             *[F.col(c) for c in value_cols],
         ]
-        # null-safe group-end detection (see lake/merge.py): lead(lit(1)) is
-        # NULL only at the last row; eqNullSafe keeps NULL keys a real group
-        last = F.lead(F.lit(1)).over(w).isNull()
-        for k in keys:
-            last = last | ~F.lead(F.col(k)).over(w).eqNullSafe(F.col(k))
+        last = key_group_last(keys)  # null-safe, see lake/merge.py
         keep = F.col("__last") & (F.col("__op") != self.delete_op)
         post_select = [*key_cols, *[F.col(c) for c in value_cols]]
 
@@ -455,19 +448,11 @@ class BucketedReplayer:
             stats = self.apply_range(
                 f"cdc-{i:08d}", start, end, summary_update={"last_batch": i}
             )
-            elapsed = time.time() - t0
-            metrics = {
-                "batch": i,
-                "commit_id": f"cdc-{i:08d}",
-                "seq_start": start,
-                "seq_end": end,
-                "buckets_touched": stats.get("affected_buckets", 0),
-                "seconds": round(elapsed, 3),
-                "events_per_sec": round((end - start + 1) / elapsed, 1) if elapsed else None,
-                "lag_events": max(0, hi - end),
-                "mode": "bucketed",
-            }
-            with open(self.metrics_path, "a", encoding="utf-8") as f:
-                f.write(json.dumps(metrics) + "\n")
+            # apply_range reports no event counts: the row carries none
+            record_metrics(
+                self.table, i, f"cdc-{i:08d}", t0, stats, counts=False,
+                seq_range=(start, end), lag_events=max(0, hi - end),
+                mode="bucketed",
+            )
             out.append(stats)
         return out

@@ -30,13 +30,14 @@ event-time watermark is needed: dedup keys on seq, not time (SURVEY.md
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from table2qb_spark.cdc.apply import malformed_reason_expr, merge_for, record_metrics
 from table2qb_spark.cdc.schema_evolution import reconcile_and_flatten
-from table2qb_spark.lake.merge import merge_upsert
 from table2qb_spark.lake.table import LakeTable
 
 BOOKKEEPING_COLUMNS = [("_seq", "long"), ("_deleted", "boolean")]
@@ -202,11 +203,7 @@ def start_stream(
     ``max_files_per_trigger``: an int, or ``"auto"`` to size triggers to
     ~4M events (env SPARK_GRAFT_STREAM_TRIGGER_EVENTS) from the backlog's
     parquet footers (see auto_max_files_per_trigger)."""
-    if merge_engine not in ("upsert", "patch"):
-        raise ValueError(f"Unknown merge_engine {merge_engine!r}")
-    if merge_engine == "patch" and merge_on_read:
-        raise ValueError("merge_engine='patch' requires copy-on-write "
-                         "(merge-on-read appends full row images)")
+    merge = merge_for(merge_engine, merge_on_read)
     if max_files_per_trigger == "auto":
         max_files_per_trigger = auto_max_files_per_trigger(spark, events_dir)
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -236,9 +233,6 @@ def start_stream(
     app_id = checkpoint_app_id(checkpoint_dir)
 
     def apply_micro_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import json
-        import time
-
         commit_id = f"stream-{app_id}-{batch_id:08d}"
         if table.has_commit(commit_id):
             return  # redelivered micro-batch: exactly-once skip
@@ -257,7 +251,6 @@ def start_stream(
             )
         dlq_events = 0
         if dlq_dir is not None:
-            from table2qb_spark.cdc.apply import malformed_reason_expr
             from table2qb_spark.ops.prep import _parquet_rows
 
             reason = malformed_reason_expr(
@@ -270,64 +263,26 @@ def start_stream(
             dlq_events = _parquet_rows(out_dir)
             batch_df = batch_df.where(reason.isNull())
         flat = reconcile_and_flatten(table, batch_df, commit_id, payload_col)
-        if merge_on_read:
-            from table2qb_spark.lake.mor import merge_mor
-
-            # MOR never uses Observation (its stats come from explicit
-            # aggregates), so it is foreachBatch-safe as-is
-            stats = merge_mor(
-                table,
-                flat,
-                commit_id,
-                op_col=op_col,
-                seq_col=seq_col,
-                summary_update={"stream_batch": batch_id},
-            )
-        elif merge_engine == "patch":
-            from table2qb_spark.lake.merge import merge_patch
-
-            # patch runs its own explicit stats pre-pass — foreachBatch-safe
-            stats = merge_patch(
-                table,
-                flat,
-                commit_id,
-                op_col=op_col,
-                seq_col=seq_col,
-                summary_update={"stream_batch": batch_id},
-            )
-        else:
-            stats = merge_upsert(
-                table,
-                flat,
-                commit_id,
-                op_col=op_col,
-                seq_col=seq_col,
-                summary_update={"stream_batch": batch_id},
-                force_stats_pass=True,  # Observation doesn't fire in foreachBatch
-            )
+        # MOR and patch run explicit stats passes; the upsert is told to,
+        # because Observation metrics never fire inside foreachBatch
+        stats = merge(
+            table,
+            flat,
+            commit_id,
+            op_col=op_col,
+            seq_col=seq_col,
+            summary_update={"stream_batch": batch_id},
+            force_stats_pass=True,
+        )
         # per-micro-batch metrics row, same file/shape as the batch
         # replayer's (cdc/apply.py) so `cdc-status --table` reads both
         # ingest paths; north_star: "per-partition throughput/lag metrics
         # emitted per micro-batch"
-        elapsed = time.time() - t0
-        n_events = int(stats.get("upserts", 0) or 0) + int(stats.get("deletes", 0) or 0)
-        metrics = {
-            "batch": batch_id,
-            "commit_id": commit_id,
-            "source": "stream",
-            "batch_events": n_events,
-            "upserts": stats.get("upserts", 0),
-            "deletes": stats.get("deletes", 0),
-            "buckets_touched": stats.get("affected_buckets", 0),
-            "seconds": round(elapsed, 3),
-            "events_per_sec": round(n_events / elapsed, 1) if elapsed else None,
-            "max_seq": (table.snapshot().summary or {}).get("max_seq"),
-            "dlq_events": dlq_events,
-            "ts": time.time(),
-        }
-        metrics_path = os.path.join(table.path, "_meta", "metrics.jsonl")
-        with open(metrics_path, "a", encoding="utf-8") as f:
-            f.write(json.dumps(metrics) + "\n")
+        record_metrics(
+            table, batch_id, commit_id, t0, stats, source="stream",
+            max_seq=(table.snapshot().summary or {}).get("max_seq"),
+            dlq_events=dlq_events, ts=time.time(),
+        )
 
     return (
         stream.writeStream.foreachBatch(apply_micro_batch)

@@ -43,13 +43,18 @@ north rule's CDC surface at the write-amplification limit.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.dedup import dedup_max_seq
-from table2qb_spark.lake.table import LakeTable, key_bucket_expr
+from table2qb_spark.lake.merge import (
+    _output,
+    _prepare,
+    _result,
+    _Stats,
+    _stats_aggs,
+)
+from table2qb_spark.lake.table import LakeTable, key_left_join
 
 
 def merge_mor(
@@ -65,144 +70,89 @@ def merge_mor(
 ) -> dict:
     """Apply one change batch merge-on-read. Same idempotency (commit_id
     skip), concurrency (base_snapshot_id), stats and ``branch`` contract as
-    ``merge_upsert``. Requires a seq-guarded table (``_seq`` column): the
-    read-time mask is versioned by sequence number."""
-    if table.has_commit(commit_id) or (
-        branch is not None and table._branch_has_commit(branch, commit_id)
-    ):
-        return {"skipped": True, "commit_id": commit_id}
-
-    t0 = time.time()
-    snap = (
-        table.snapshot(table.branch_head(branch))
-        if branch is not None
-        else table.snapshot()
+    ``merge_upsert``, and the same prepare/stats/output steps
+    (``lake/merge.py``); only the winners and the commit are its own.
+    Requires a seq-guarded table (``_seq`` column): the read-time mask is
+    versioned by sequence number."""
+    m = _prepare(
+        table, batch_df, commit_id, op_col, seq_col, delete_op, summary_update,
+        publish, branch,
     )
-    keys = snap.key_columns
-    data_cols = [c["name"] for c in snap.current_schema()]
-    if "_seq" not in data_cols:
+    if m is None:
+        return {"skipped": True, "commit_id": commit_id}
+    if not m.seq_guard:
         raise ValueError(
             "merge-on-read needs a seq-guarded table (_seq column): the "
             "equality-delete mask is versioned by sequence number "
             "(create_stream_table declares it)"
         )
-    tombstones = "_deleted" in data_cols
-    value_cols = [
-        c for c in data_cols if c not in keys and c not in ("_seq", "_deleted")
-    ]
-    required = list(dict.fromkeys(keys + value_cols + [op_col, seq_col]))
-    missing = [c for c in required if c not in batch_df.columns]
-    if missing:
-        raise ValueError(f"Batch is missing columns {missing}")
 
-    batch_sel = batch_df.select(
-        *keys,
-        F.col(seq_col).cast("long").alias("__seq"),
-        F.col(op_col).alias("__op"),
-        *[F.col(c) for c in value_cols],
-    )
-    winners = dedup_max_seq(batch_sel, keys, seq_col="__seq").withColumn(
-        "__bucket", key_bucket_expr(keys, snap.n_buckets)
-    )
-
-    # touched buckets: tiny distinct (bounded by n_buckets)
-    touched = sorted(
-        r["__bucket"] for r in winners.select("__bucket").distinct().collect()
-    )
+    # touched buckets: the narrow per-bucket stats pass (bounded by n_buckets)
+    touched = _Stats.of(m, by_bucket=True).buckets
     if not touched:
         # empty batch still commits (exactly-once marker for the range)
         table.commit_appends(
             commit_id, [], {}, {}, summary_update,
-            base_snapshot_id=snap.snapshot_id, publish=publish,
+            base_snapshot_id=m.snap.snapshot_id, publish=publish,
             branch=branch,
         )
-        return {
-            "skipped": False,
-            "commit_id": commit_id,
-            "affected_buckets": 0,
-            "upserts": 0,
-            "deletes": 0,
-            "strategy": "mor",
-            "seconds": time.time() - t0,
-        }
+        return _result(m, 0, _Stats([]), "mor")
 
+    winners = dedup_max_seq(
+        m.batch.drop("__pri"), m.keys, seq_col="__seq"
+    ).withColumn("__bucket", m.bucket())
     # cross-batch seq guard: current per-key max LIVE seq in the touched
     # buckets — a column-pruned (keys + _seq) masked read, never the payload
     cur_max = (
-        table.read(
-            snapshot_id=None if branch is None else snap.snapshot_id,
-            buckets=touched,
-        )
-        .select(*keys, F.col("_seq").alias("__cur_seq"))
-        .groupBy(*keys)
+        m.read(touched)
+        .select(*m.keys, F.col("_seq").alias("__cur_seq"))
+        .groupBy(*m.keys)
         .agg(F.max("__cur_seq").alias("__cur_seq"))
     )
     kept = (
-        winners.join(cur_max, keys, "left")
+        key_left_join(winners, cur_max, m.keys)
         .where(F.col("__cur_seq").isNull() | (F.col("__seq") > F.col("__cur_seq")))
         .persist()  # three consumers below: counts, data write, delete write
     )
     try:
         got = kept.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("__op") == delete_op, 1).otherwise(0)).alias("dels"),
+            *_stats_aggs(delete_op),
             F.sum(F.col("__cur_seq").isNotNull().cast("int")).alias("existed"),
-            F.max("__seq").alias("max_seq"),
         ).collect()[0]
-        n_kept, n_dels = int(got["n"] or 0), int(got["dels"] or 0)
-
-        hint = f"{snap.snapshot_id + 1:08d}"
-        rows = kept.withColumn("_seq", F.col("__seq"))
-        row_cols = keys + value_cols + ["_seq"]
-        if tombstones:
-            rows = rows.withColumn("_deleted", F.col("__op") == delete_op)
-            row_cols.append("_deleted")
-        else:
-            rows = rows.where(F.col("__op") != delete_op)
+        stats = _Stats([got])
         new_files = (
-            table.write_data_files(rows.select(*row_cols, "__bucket"), hint)
-            if n_kept
-            else {}
+            table.write_data_files(_output(m, kept), m.hint) if stats.n else {}
         )
 
         # equality-delete entries: one per kept winner whose key EXISTED
         # (each masks exactly one then-live copy — the row-count invariant).
         # Tombstone-less deletes mask their own seq too (no data row lands).
         dels = kept.where(F.col("__cur_seq").isNotNull()).select(
-            *keys,
+            *m.keys,
             (
                 F.col("__seq")
                 + (
                     F.lit(0)
-                    if tombstones
+                    if m.tombstones
                     else F.when(F.col("__op") == delete_op, 1).otherwise(0)
                 )
             ).alias("_below_seq"),
             "__bucket",
         )
-        new_deletes = table.write_delete_files(dels, hint) if n_kept else {}
+        new_deletes = table.write_delete_files(dels, m.hint) if stats.n else {}
 
         su = dict(summary_update or {})
-        su.setdefault("max_seq", got["max_seq"])
+        su.setdefault("max_seq", stats.max_seq)
         table.commit_appends(
             commit_id,
             touched,
             new_files,
             new_deletes,
             su,
-            base_snapshot_id=snap.snapshot_id,
+            base_snapshot_id=m.snap.snapshot_id,
             publish=publish,
             branch=branch,
         )
     finally:
         kept.unpersist()
-    return {
-        "skipped": False,
-        "commit_id": commit_id,
-        "affected_buckets": len(touched),
-        "upserts": n_kept - n_dels,
-        "deletes": n_dels,
-        "updates": int(got["existed"] or 0),
-        "strategy": "mor",
-        "seconds": time.time() - t0,
-    }
+    return _result(m, len(touched), stats, "mor", updates=int(got["existed"] or 0))

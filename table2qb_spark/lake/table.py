@@ -81,6 +81,20 @@ def key_bucket_expr(key_cols: list[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(F.concat(*parts)), F.lit(n_buckets)).cast("int")
 
 
+def key_left_join(left: DataFrame, right: DataFrame, key_cols: list[str]) -> DataFrame:
+    """``left.join(right, key_cols, "left")`` with NULL keys matching each
+    other: a NULL key column is a real key in the merge contract (the bucket
+    transform above routes it like any value), which a plain equi-join would
+    never match. Still an equi-join to the planner (EqualNullSafe keys), so
+    broadcast and hash joins apply as before. Left's columns come first."""
+    renamed = right.select(
+        *[F.col(k).alias(f"__rk_{k}") for k in key_cols],
+        *[c for c in right.columns if c not in key_cols],
+    )
+    cond = [F.col(k).eqNullSafe(F.col(f"__rk_{k}")) for k in key_cols]
+    return left.join(renamed, cond, "left").drop(*[f"__rk_{k}" for k in key_cols])
+
+
 class _BucketFiles(Mapping):
     """Lazy bucket -> file-entries map backed by per-bucket manifest files.
 
@@ -1310,8 +1324,8 @@ class LakeTable:
             # stamps each update's seq; the new winner has _seq == its own
             # _below_seq, so >= keeps it). One aggregate over the delete set
             # (bounded by updates since the last compaction, not table size)
-            # + one equi-join on the keys; AQE broadcasts the delete side in
-            # the common small case.
+            # + one null-safe equi-join on the keys; AQE broadcasts the
+            # delete side in the common small case.
             types = {c["name"]: c["type"] for c in current}
             del_schema = StructType.fromDDL(
                 ", ".join(
@@ -1325,9 +1339,9 @@ class LakeTable:
             dagg = dd.groupBy(*snap.key_columns).agg(
                 F.max("_below_seq").alias("__below_seq")
             )
-            cols_before = out.columns  # the join reorders keys to the front
+            cols_before = out.columns
             out = (
-                out.join(dagg, snap.key_columns, "left")
+                key_left_join(out, dagg, snap.key_columns)
                 .where(
                     F.col("__below_seq").isNull()
                     | (F.col("_seq") >= F.col("__below_seq"))

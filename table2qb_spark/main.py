@@ -1148,11 +1148,19 @@ def cmd_cdc_status(args) -> int:
         secs = [r["seconds"] for r in rows if r.get("seconds")]
         eps = [r["events_per_sec"] for r in rows if r.get("events_per_sec")]
         ev = sum(int(r.get("batch_events", 0) or 0) for r in rows)
+        # the rate sums events and seconds over the SAME rows: bucketed
+        # replay rows carry seconds but no event count
+        counted = [r for r in rows if "batch_events" in r and r.get("seconds")]
+        counted_secs = sum(r["seconds"] for r in counted)
         out["ingest"] = {
             "batches": len(rows),
             "stream_batches": sum(1 for r in rows if r.get("source") == "stream"),
             "events_applied": ev,
-            "overall_events_per_sec": round(ev / sum(secs), 1) if secs else None,
+            "overall_events_per_sec": (
+                round(sum(int(r["batch_events"] or 0) for r in counted)
+                      / counted_secs, 1)
+                if counted_secs else None
+            ),
             "batch_seconds_p50": pct(secs, 0.5) if secs else None,
             "batch_seconds_p95": pct(secs, 0.95) if secs else None,
             "events_per_sec_p50": pct(eps, 0.5) if eps else None,

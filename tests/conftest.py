@@ -42,3 +42,17 @@ def default_config():
     if not os.path.exists(path):
         pytest.skip("reference columns.csv not available")
     return load_column_configuration(path)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One counted line for the tests skipped because the reference checkout
+    is absent, instead of only silent ``s`` marks."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and "reference" in str(rep.longrepr[2])
+    )
+    if n:
+        terminalreporter.write_line(
+            f"reference-dependent: {n} skipped ({REFERENCE} absent)"
+        )

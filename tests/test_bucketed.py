@@ -210,3 +210,35 @@ def test_statless_file_degrades_only_its_own_bucket(spark, tmp_path, logs):
     # a seq range beyond every real footer range touches ONLY the degraded
     # bucket — buckets 1..N-1 are still pruned
     assert r.buckets_in_range(90_000_000, 99_000_000) == [0]
+
+
+def test_status_rate_counts_only_rows_with_events(spark, tmp_path, logs, capsys):
+    """cdc-status --metrics: bucketed replay rows carry seconds but no event
+    count, so the overall rate sums events and seconds over the rows that
+    have both — a bucketed row must not dilute the batch rows' rate."""
+    import json
+    import os
+
+    from table2qb_spark.main import main
+
+    _, bucketed, _ = logs
+    t = LakeTable.create(spark, str(tmp_path / "t"), BASE_SCHEMA, KEYS, n_buckets=N_BUCKETS)
+    BucketedReplayer(spark, t, bucketed, batch_events=1000).run(max_batches=1)
+    ledger = os.path.join(t.path, "_meta", "metrics.jsonl")
+    with open(ledger) as f:
+        (bucketed_row,) = [json.loads(x) for x in f if x.strip()]
+    assert bucketed_row["mode"] == "bucketed" and "batch_events" not in bucketed_row
+    batch_row = {
+        "batch": 1, "commit_id": "cdc-00000001", "seq_start": 1000,
+        "seq_end": 1999, "batch_events": 600, "upserts": 550, "deletes": 50,
+        "buckets_touched": 4, "seconds": 2.0, "events_per_sec": 500.0,
+        "lag_events": 0, "dlq_events": 0, "ts": 0.0,
+    }
+    with open(ledger, "a") as f:
+        f.write(json.dumps(batch_row) + "\n")
+
+    assert main(["cdc-status", "--table", t.path, "--metrics"]) == 0
+    ingest = json.loads(capsys.readouterr().out)["ingest"]
+    assert ingest["batches"] == 2
+    assert ingest["events_applied"] == 600
+    assert ingest["overall_events_per_sec"] == 300.0

@@ -109,6 +109,24 @@ class TestLakeTable:
         assert {(r["path"], r["n"]) for r in out.collect()} == {
             ("a.py", 20), ("b.py", 30)
         }
+        # merge-on-read shares the same prepare step: its appended winners
+        # must land as int too, or the next read_live() fails
+        from table2qb_spark.cdc.streaming import create_stream_table
+        from table2qb_spark.lake.mor import merge_mor
+
+        st = create_stream_table(
+            spark, str(tmp_path / "mor"),
+            [("repo", "string"), ("path", "string"), ("n", "int")],
+            KEYS, n_buckets=2,
+        )
+        merge_mor(st, mk([(1, "I", "r1", "a.py", 10)]), "b1")
+        merge_mor(st, mk([(2, "U", "r1", "a.py", 20),
+                          (3, "I", "r1", "b.py", 30)]), "b2")
+        live = st.read_live()
+        assert dict(live.dtypes)["n"] == "int"
+        assert {(r["path"], r["n"]) for r in live.collect()} == {
+            ("a.py", 20), ("b.py", 30)
+        }
 
     def test_commit_idempotency(self, spark, tmp_path):
         t = make_table(spark, tmp_path)
@@ -550,12 +568,14 @@ class TestPerBucketManifests:
 
 
 class TestMergeStrategyEquivalence:
-    """Fuzz: every merge strategy (late-materialization, single-pass window,
-    pruned copy-on-write, and a seq-split two-batch replay) must converge to
-    the IDENTICAL table state, which must equal the single-threaded Python
-    oracle. Events honor the merge contract (seq unique per key; exact
-    duplicates allowed) but are adversarial otherwise: NULL-able keys,
-    deletes, heavy cross-key seq collisions, random arrival order."""
+    """Fuzz: every merge path (late-materialization, single-pass window,
+    pruned copy-on-write, each with and without the forced stats pass; the
+    CDF aggregate; the patch engine; merge-on-read; one-shot and seq-split
+    two-batch replays) must converge to the IDENTICAL live state, which
+    must equal the single-threaded Python oracle. Events honor the merge
+    contract (seq unique per key; exact duplicates allowed) but are
+    adversarial otherwise: NULL-able keys, deletes, heavy cross-key seq
+    collisions, random arrival order."""
 
     def _events(self, seed: int):
         import random
@@ -593,36 +613,91 @@ class TestMergeStrategyEquivalence:
         return oracle_sha(list(replay_oracle([], uniq).values()), cols)
 
     @pytest.mark.parametrize("seed", [3, 11])
-    def test_all_strategies_converge(self, spark, tmp_path, monkeypatch, seed):
-        events = self._events(seed)
+    def test_all_strategies_converge(self, spark, tmp_path, seed):
+        from table2qb_spark.cdc.streaming import create_stream_table
+        from table2qb_spark.lake.merge import merge_patch
+        from table2qb_spark.lake.mor import merge_mor
+
+        # padding keys make batch 2 of a split small against the table, so
+        # the forced stats pass picks the pruned path
+        pad = [
+            (1, "I", f"r{j % 5}", f"pad{j}.py", f"p{j}", "py", f"pad-{j}")
+            for j in range(600)
+        ]
+        events = self._events(seed) + pad
         cols = [c for c, _ in BASE_SCHEMA]
         expected = self._oracle_sha(events, cols)
         mid = sorted({e[0] for e in events})[len({e[0] for e in events}) // 2]
+        first = batch_df(spark, [e for e in events if e[0] <= mid])
+        second = batch_df(spark, [e for e in events if e[0] > mid])
         shas = {}
 
-        t = LakeTable.create(spark, str(tmp_path / "lm"), BASE_SCHEMA, KEYS, n_buckets=4)
+        def plain(name):
+            return LakeTable.create(
+                spark, str(tmp_path / name), BASE_SCHEMA, KEYS, n_buckets=4
+            )
+
+        def stream_table(name, **props):
+            return create_stream_table(
+                spark, str(tmp_path / name), BASE_SCHEMA, KEYS, n_buckets=4,
+                properties=props or None,
+            )
+
+        t = plain("lm")
         s = merge_upsert(t, batch_df(spark, events), "b")
         assert s["strategy"] == "late-materialization"
         shas["late-mat"] = table_sha256(t.read(), cols)
 
-        monkeypatch.setenv("SPARK_GRAFT_LATE_MAT", "0")
-        t = LakeTable.create(spark, str(tmp_path / "sp"), BASE_SCHEMA, KEYS, n_buckets=4)
-        s = merge_upsert(t, batch_df(spark, events), "b")
+        # the salted pre-combine (the CLI's --salted-dedup) skips late-mat
+        t = plain("sp")
+        s = merge_upsert(t, batch_df(spark, events), "b", two_phase_dedup=True)
         assert s["strategy"] == "single-pass"
-        shas["single-pass"] = table_sha256(t.read(), cols)
-        monkeypatch.delenv("SPARK_GRAFT_LATE_MAT")
+        shas["two-phase+single-pass"] = table_sha256(t.read(), cols)
 
         # split replay: batch 1 (late-mat, empty table) then batch 2 into the
-        # non-empty table — forced down the PRUNED path via a tiny size hint
-        first = [e for e in events if e[0] <= mid]
-        second = [e for e in events if e[0] > mid]
-        t = LakeTable.create(spark, str(tmp_path / "2b"), BASE_SCHEMA, KEYS, n_buckets=4)
-        merge_upsert(t, batch_df(spark, first), "b1")
-        s = merge_upsert(t, batch_df(spark, second), "b2", batch_size_hint=1)
-        assert s["strategy"] == "pruned"
-        shas["split+pruned"] = table_sha256(t.read(), cols)
+        # non-empty table — with no size hint it takes the single-pass path,
+        # with a tiny hint the PRUNED one
+        for name, hint, strategy in (
+            ("split+single-pass", None, "single-pass"),
+            ("split+pruned", 1, "pruned"),
+        ):
+            t = plain(name)
+            merge_upsert(t, first, "b1")
+            s = merge_upsert(t, second, "b2", batch_size_hint=hint)
+            assert s["strategy"] == strategy
+            shas[name] = table_sha256(t.read(), cols)
 
-        assert shas["late-mat"] == shas["single-pass"] == shas["split+pruned"] == expected
+        # seq-guarded tombstone tables, read live
+        t = stream_table("lm-forced")
+        s = merge_upsert(t, batch_df(spark, events), "b", force_stats_pass=True)
+        assert s["strategy"] == "late-materialization"
+        shas["forced+late-mat"] = table_sha256(t.read_live(), cols)
+
+        t = stream_table("pr-forced")
+        merge_upsert(t, first, "b1", force_stats_pass=True)
+        s = merge_upsert(t, second, "b2", force_stats_pass=True)
+        assert s["strategy"] == "pruned"
+        shas["forced+pruned"] = table_sha256(t.read_live(), cols)
+
+        t = stream_table("cdf", **{"cdf.enabled": "true"})
+        merge_upsert(t, first, "b1")
+        s = merge_upsert(t, second, "b2")
+        assert s["strategy"] == "agg-cdf"
+        shas["agg-cdf"] = table_sha256(t.read_live(), cols)
+
+        # full row images: the patch fold reduces to last-row-wins
+        t = stream_table("patch")
+        merge_patch(t, first, "b1")
+        merge_patch(t, second, "b2")
+        shas["patch"] = table_sha256(t.read_live(), cols)
+
+        t = stream_table("mor")
+        merge_mor(t, first, "b1")
+        s = merge_mor(t, second, "b2")
+        assert s["strategy"] == "mor"
+        shas["mor"] = table_sha256(t.read_live(), cols)
+
+        assert set(shas.values()) == {expected}, shas
 
 
 class TestEventsFormats:
